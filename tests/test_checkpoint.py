@@ -48,3 +48,40 @@ def test_reliable_when_conf_set(spark, tmp_path):
         assert "LogicalRDD" in _plan(out)
     finally:
         spark.conf.unset(_CONF_KEY)
+
+
+def test_loop_blocks_freed_once_frame_dropped(spark):
+    """A query leaves no cached data behind without any clearCache():
+    graph_connected_components' checkpointed labels belong to the
+    returned frame, and once the caller drops it the ContextCleaner
+    releases every persistent RDD the query created (bounded poll of
+    Python gc plus a JVM System.gc())."""
+    import gc
+    import time
+
+    from tests.conftest import SF_ORACLE
+    from vector_db_core_spark.operators import QUERIES
+
+    sc = spark.sparkContext
+
+    def live() -> int:
+        return sc._jsc.getPersistentRDDs().size()
+
+    def collect_garbage() -> None:
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(0.2)
+
+    for _ in range(3):  # settle blocks earlier tests already dropped
+        collect_garbage()
+    base = live()
+    df = QUERIES["graph_connected_components"](spark, SF_ORACLE)
+    df.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert live() > base, "the returned frame should own checkpointed blocks"
+    del df
+    for _ in range(50):
+        collect_garbage()
+        if live() <= base:
+            break
+    assert live() <= base, f"{live()} persistent RDDs left, baseline {base}"

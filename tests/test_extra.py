@@ -419,7 +419,6 @@ def test_kcore_trajectory_monotone_and_converges(spark):
         assert b.n_nodes <= a.n_nodes and b.n_edges <= a.n_edges, (a, b)
     assert rows[-1].n_nodes == rows[-2].n_nodes  # fixpoint reached
     assert rows[-1].n_edges == rows[-2].n_edges
-    spark.catalog.clearCache()
 
 
 def test_kcore_two_actions_per_round(spark, monkeypatch):
@@ -466,7 +465,6 @@ def test_kcore_two_actions_per_round(spark, monkeypatch):
         seen.append((r.n_nodes, r.n_edges))
     assert built["count"] == 2 * live, (built, live)
     assert built["collect"] == 1, built  # the k quantile only
-    spark.catalog.clearCache()
 
 
 def test_chi2_and_mi_match_numpy_rederivation(spark):
@@ -594,7 +592,6 @@ def test_graph_family_builds_edges_once_per_session(spark):
     df = QUERIES["graph_degree_distribution"](spark, SF_ORACLE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert scratch.path_for(A._CO_EDGE_SCRATCH_KEY, SF_ORACLE) in plan
-    spark.catalog.clearCache()
 
 
 def test_pattern_sequences_match_python_re(spark):
@@ -1005,7 +1002,6 @@ def test_bucketed_entropy_twin_bounds_exact(spark):
         b.entropy_bucketed_bits for c, b in bkt.items() if c != "o_custkey"
     )
     assert bkt["o_custkey"].entropy_bucketed_bits > low
-    spark.catalog.clearCache()
 
 
 def _check_entropy_profile(ent):
@@ -1064,7 +1060,6 @@ def test_round12_wave2_invariants(spark):
     assert abs(
         r.risk_ratio - round(r.risk_exposed / r.risk_unexposed, 6)
     ) < 1e-5
-    spark.catalog.clearCache()
 
 
 def test_round12_wave3_invariants(spark):
@@ -1098,7 +1093,6 @@ def test_round12_wave3_invariants(spark):
         assert r.n_gaps == per_type[r.event_type] - 1
         assert r.min_gap_us / 1e6 <= r.p50_gap_s <= r.p90_gap_s <= r.max_gap_us / 1e6
         assert r.min_gap_us / 1e6 <= r.mean_gap_s <= r.max_gap_us / 1e6
-    spark.catalog.clearCache()
 
 
 def test_interarrival_stitched_row_identical(spark):
@@ -1183,7 +1177,6 @@ def test_holt_winters_matches_python_recurrence(spark):
         key = (r.event_type, r.day.date())
         l, b, s, f = expect[key]
         assert (r.level, r.trend, r.seasonal, r.forecast_next) == (l, b, s, f), r
-    spark.catalog.clearCache()
 
 
 def test_residual_anomalies_consistent_with_decompose(spark):
@@ -1204,7 +1197,6 @@ def test_residual_anomalies_consistent_with_decompose(spark):
         assert r.n_scored == 24, r
         if r.event_type == "purchase":
             assert abs(r.residual - dec[r.day]) < 1e-6, r
-    spark.catalog.clearCache()
 
 
 def test_freshness_sla_invariants(spark):
@@ -1222,7 +1214,6 @@ def test_freshness_sla_invariants(spark):
         assert 0 <= r.stale_7d_share <= 1
         assert r.stale_7d_share > 0.5  # 30-day span, 7-day horizon
         assert r.sla_breached == (r.lag_minutes > 60.0)
-    spark.catalog.clearCache()
 
 
 def test_kmv_sketch_estimates_track_truth(spark):
@@ -1250,7 +1241,6 @@ def test_kmv_sketch_estimates_track_truth(spark):
         if r.exact_union > 256:
             engaged += 1
     assert engaged > 0  # the estimator path genuinely ran
-    spark.catalog.clearCache()
 
 
 def test_connected_components_partition_the_graph(spark):
@@ -1267,7 +1257,6 @@ def test_connected_components_partition_the_graph(spark):
     rows = QUERIES["graph_connected_components"](spark, SF_ORACLE).collect()
     assert all(r.component_size >= 1 and r.n_components >= 1 for r in rows)
     assert sum(r.component_size * r.n_components for r in rows) == n_nodes
-    spark.catalog.clearCache()
 
 
 def test_kcore_initial_degree_aggregate_folded(spark, monkeypatch):
@@ -1625,7 +1614,6 @@ def test_link_prediction_python_rederivation(spark):
                 for v in nbr)
     }
     assert set(by_seed) == seeds_with_candidates
-    spark.catalog.clearCache()
 
 
 def test_seasonal_decompose_identity_and_edges(spark):
@@ -1738,7 +1726,6 @@ def test_spearman_matches_numpy_midranks(spark):
     assert got.n == len(rows)
     assert abs(got.spearman_rho - want) < 1e-6, (got.spearman_rho, want)
     assert got.spearman_rho > 0.5  # the monotone-link fixture reading
-    spark.catalog.clearCache()
 
 
 def test_odds_ratio_zero_cell_haldane_matches_oracle(spark, tmp_path):

@@ -709,7 +709,6 @@ def test_pq_exact_twin_agrees_with_production_encoder(spark):
         for r in _pq_encode(spark, e, books).collect()
     }
     assert prod == twin
-    spark.catalog.clearCache()
 
 
 def test_pq_adc_recall_against_true_ranking(spark):
@@ -750,7 +749,6 @@ def test_pq_adc_recall_against_true_ranking(spark):
     true_top = {v for _, v in order[:20]}
     recall = len(true_top & {r.vec_id for r in rows}) / 20
     assert recall >= 0.2, recall
-    spark.catalog.clearCache()
 
 
 def test_ivfpq_prunes_and_agrees_with_adc(spark):
@@ -782,7 +780,6 @@ def test_ivfpq_prunes_and_agrees_with_adc(spark):
     assert overlap, "probe cells missed every flat-ADC hit"
     for r in overlap:
         assert r.adc_dist == flat[r.vec_id], r
-    spark.catalog.clearCache()
 
 
 def test_streaming_ivf_cells_matches_batch_row_for_row(spark):
@@ -804,7 +801,6 @@ def test_streaming_ivf_cells_matches_batch_row_for_row(spark):
         )
     )
     assert batch == streamed and len(batch) == 10
-    spark.catalog.clearCache()
 
 
 def test_distinct_ngrams_approx_within_error_bound(spark):
@@ -834,24 +830,38 @@ def test_distinct_ngrams_approx_within_error_bound(spark):
             assert (av is None) == (ev is None), (src, col)
             if ev is not None:
                 assert abs(av - ev) / ev <= 0.02, (src, col, av, ev)
-    spark.catalog.clearCache()
 
 
-def test_ivfpq_partitioned_prunes_partitions_and_matches_inline(spark):
+def test_ivfpq_partitioned_prunes_partitions_and_matches_inline(spark, monkeypatch):
     """The serving-layout variant (r12-verdict task 5): the
     cell-partitioned codes table's probe must be answered by PARQUET
-    PARTITION PRUNING — the executed plan's codes-table scan carries
+    PARTITION PRUNING — the codes-table scan carries
     ``PartitionFilters: [cell IN (a,b)]`` with exactly nprobe=2 cells
     and a ReadSchema WITHOUT the pruned-away cell column — and the
     result must be row-identical to the inline ``sim_ivfpq_topk``
-    (same kernel, same LUT, same oracle)."""
+    (same kernel, same LUT, same oracle). The probed slice is
+    checkpointed, so the scan sits in the plan of the cut frame."""
     import os
     import re
 
     from tests.conftest import SF_ORACLE
-    from vector_db_core_spark import scratch
-    from vector_db_core_spark.operators import QUERIES
+    from vector_db_core_spark import checkpoint, scratch
+    from vector_db_core_spark.operators import QUERIES, llm
 
+    def formatted(frame):
+        return frame._jdf.queryExecution().explainString(
+            frame._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
+        )
+
+    cuts: list[str] = []
+
+    def spy(frame, eager=False):
+        cuts.append(formatted(frame))
+        return checkpoint.loop_checkpoint(frame, eager=eager)
+
+    monkeypatch.setattr(llm, "loop_checkpoint", spy)
     df = QUERIES["sim_ivfpq_partitioned_topk"](spark, SF_ORACLE)
     got = sorted(map(tuple, df.collect()))
     inline = sorted(map(tuple, QUERIES["sim_ivfpq_topk"](spark, SF_ORACLE).collect()))
@@ -861,18 +871,13 @@ def test_ivfpq_partitioned_prunes_partitions_and_matches_inline(spark):
     assert path is not None
     cell_dirs = [d for d in os.listdir(path) if d.startswith("cell=")]
     assert len(cell_dirs) > 2  # pruning has something to prune
-    plan = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    plan = "\n\n".join([formatted(df), *cuts])
     seg = next(
         seg for seg in plan.split("\n\n") if "vdbc_ivfpq_codes" in seg
     )
     m = re.search(r"PartitionFilters: \[cell#\d+ IN \(([\d,]+)\)\]", seg)
     assert m, seg
     assert len(m.group(1).split(",")) == 2  # exactly nprobe partitions
-    spark.catalog.clearCache()
 
 
 def test_rrf_fusion_invariants(spark):
@@ -909,7 +914,6 @@ def test_rrf_fusion_invariants(spark):
             (r.rrf_score for r in rows if r not in both), default=0.0
         )
         assert max(r.rrf_score for r in both) >= singles_best
-    spark.catalog.clearCache()
 
 
 def test_hashed_span_dedup_equals_exact_twin(spark):

@@ -31,6 +31,8 @@ def test_oracle_match(name, spark, duck):
     rel = duck.sql(oracles[name])
     problems = compare_spark_duck(df, rel)
     assert not problems, f"{name}: " + " | ".join(problems)
+    # no cached data left behind, with no caller-side clearCache()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
 
 
 def test_entry_smoke(spark):
@@ -65,12 +67,16 @@ def test_entry_smoke(spark):
 def test_results_partition_independent(name, spark):
     """The exact-arithmetic policy's real claim: identical results at
     ANY parallelism. Run each decimal-accumulation query at 3 and 32
-    shuffle partitions and require bit-identical rows."""
+    shuffle partitions and require bit-identical rows. The second run
+    must RECOMPUTE: nothing the first run materialized may be cached,
+    or CacheManager would serve the 3-partition result to the rebuilt
+    plan."""
     q = _pairs()[1]
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
         a = sorted(map(str, q[name](spark, SF_ORACLE).collect()))
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
         spark.conf.set("spark.sql.shuffle.partitions", "32")
         b = sorted(map(str, q[name](spark, SF_ORACLE).collect()))
     finally:

@@ -29,6 +29,36 @@ def _plan_simple(df) -> str:
     )
 
 
+def _final_plan(df) -> str:
+    """Run ``df`` and return its adaptive FINAL plan (simple mode).
+    Exchange reuse across branches happens at run time, so "the source
+    is read once" shows only after execution, as ReusedExchange."""
+    df.collect()
+    return _plan_simple(df).split("== Initial Plan ==")[0]
+
+
+def _cut_plans(monkeypatch) -> list[str]:
+    """Collect the simple plan of every frame an operator cuts with
+    ``loop_checkpoint`` while building a query: the materialized
+    subtrees the returned plan shows only as ``Scan ExistingRDD``."""
+    from vector_db_core_spark import checkpoint
+    from vector_db_core_spark.operators import analytics, extra, llm, pipeline, warehouse
+
+    plans: list[str] = []
+
+    def spy(df, eager=False):
+        plans.append(_plan_simple(df))
+        return checkpoint.loop_checkpoint(df, eager=eager)
+
+    for mod in (analytics, extra, llm, pipeline, warehouse):
+        monkeypatch.setattr(mod, "loop_checkpoint", spy)
+    return plans
+
+
+def _file_scans(plan: str, table: str) -> int:
+    return sum("FileScan parquet" in ln and table in ln for ln in plan.splitlines())
+
+
 def test_ordinal_range_predicate_pushed_down(spark, tmp_path):
     """pullx's rowid BETWEEN must reach the parquet scan (the analog of
     the reference's O(1) offset arithmetic — row-group pruning)."""
@@ -545,13 +575,17 @@ def test_q2_window_on_aggregated_pairs_only(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_q15_revenue_view_cached_for_both_consumers(spark):
+def test_q15_revenue_view_cached_for_both_consumers(spark, monkeypatch):
     """Q15's revenue view feeds the max AND the equality filter; the
-    plan must read it from the persisted InMemoryRelation on both
-    branches instead of re-aggregating lineitem twice."""
+    plan must read it from the checkpointed view on both branches
+    instead of re-aggregating lineitem twice — lineitem is scanned
+    once, inside the cut."""
+    cuts = _cut_plans(monkeypatch)
     df = QUERIES["q15_top_supplier"](spark, SF_ORACLE)
     plan = _plan_simple(df)
-    assert plan.count("InMemoryTableScan") >= 2, plan
+    assert plan.count("Scan ExistingRDD[supplier_no") >= 2, plan
+    assert _file_scans(plan, "lineitem") == 0, plan
+    assert sum(_file_scans(c, "lineitem") for c in cuts) == 1, cuts
 
 
 def test_scd2_shuffles_key_on_user_only(spark):
@@ -852,27 +886,21 @@ def test_mode_frequency_window_on_reduction(spark):
 
 
 def test_logprob_family_single_corpus_scan(spark):
-    """The LM-scoring family reduces from ONE persisted doc-term-
-    frequency table (the pipeline_dsir_weights replan): every
-    consumer (vocab freq / corpus total / scoring) reads the cached
-    InMemoryRelation, never the parquet file directly — the FileScan
-    lines under each InMemoryRelation are the cache's materialization
-    recipe, executed once. The vocab table broadcasts."""
+    """The LM-scoring family reduces from ONE doc-term-frequency
+    exchange (the pipeline_dsir_weights replan): every consumer
+    (vocab freq / corpus total / scoring) reads that exchange — the
+    first directly, the others as ReusedExchange — so the executed
+    plan scans the corpus exactly once. The vocab table broadcasts."""
     for name, n_consumers in (
         ("text_unigram_logprob", 3),
-        # buckets layers a second persist (lp) with 2 consumers on top
+        # buckets layers a second consumer pair (terciles + tagging)
         ("text_perplexity_buckets", 2),
     ):
-        simple = _plan_simple(QUERIES[name](spark, SF_ORACLE))
-        assert simple.count("InMemoryTableScan") >= n_consumers, name
-        # no parquet scan OUTSIDE a cached-relation recipe: every
-        # FileScan line sits under an InMemoryRelation block
-        lines = simple.splitlines()
-        im_cols = [len(l) - len(l.lstrip(" :+-")) for l in lines if "InMemoryRelation" in l]
-        for i, l in enumerate(lines):
-            if "FileScan parquet" in l:
-                depth = len(l) - len(l.lstrip(" :+-"))
-                assert any(c < depth for c in im_cols), (name, l)
+        final = _final_plan(QUERIES[name](spark, SF_ORACLE))
+        assert final.count("ReusedExchange") >= n_consumers - 1, (name, final)
+        # no second parquet read: one FileScan in the whole final plan
+        assert final.count("FileScan parquet") == 1, (name, final)
+        assert "BroadcastExchange" in final, name
 
 
 def test_pca_exact_covariance_no_vec_keyed_self_join(spark):
@@ -940,24 +968,14 @@ def test_oversample_corpus_never_shuffles(spark):
 
 def test_drift_kl_single_scan_broadcast_totals(spark):
     """Train/val drift: both consumers (per-token rows, one-row
-    totals) read the PERSISTED vocab reduction — exactly one corpus
-    FileScan in the plan (inside the InMemoryRelation recipe),
-    totals broadcast."""
-    df = QUERIES["pipeline_unigram_drift_kl"](spark, SF_ORACLE)
-    simple = _plan_simple(df)
-    try:
-        assert simple.count("InMemoryTableScan") >= 2, simple
-        assert "BroadcastExchange" in simple
-        # every FileScan sits inside a cached-relation recipe (the
-        # text_unigram_logprob assertion): no direct corpus re-read
-        lines = simple.splitlines()
-        im_cols = [len(l) - len(l.lstrip(" :+-")) for l in lines if "InMemoryRelation" in l]
-        for l in lines:
-            if "FileScan parquet" in l:
-                depth = len(l) - len(l.lstrip(" :+-"))
-                assert any(c < depth for c in im_cols), l
-    finally:
-        spark.catalog.clearCache()
+    totals) read the SAME vocab-reduction exchange (the second as
+    ReusedExchange) — exactly one corpus FileScan in the executed
+    plan, totals broadcast."""
+    final = _final_plan(QUERIES["pipeline_unigram_drift_kl"](spark, SF_ORACLE))
+    assert final.count("ReusedExchange") >= 1, final
+    assert "BroadcastExchange" in final
+    # no direct corpus re-read (the text_unigram_logprob assertion)
+    assert final.count("FileScan parquet") == 1, final
 
 
 def test_topn_ties_rank_window_on_pruned_candidates(spark):
@@ -995,30 +1013,43 @@ def test_minhash_md5_estimate_no_all_pairs(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_round9_gini_and_theil_sen_rank_reductions(spark):
+def test_round9_gini_and_theil_sen_rank_reductions(spark, monkeypatch):
     """Gini's global ranking window and Theil-Sen's pairwise self-join
     must feed from the per-customer / per-day reduction (partial hash
     aggregate between the scan and any SinglePartition exchange or
     join), never the raw fact table — the reduce-then-rank/pair
     discipline that keeps both ops corpus-size-independent past the
-    first rollup."""
+    first rollup. Gini's ranked reduction is checkpointed, so its
+    scan-side subtree is checked in the cut plan it was built from."""
     for name in ("agg_gini_customer_spend", "timeseries_theil_sen_trend"):
+        cuts = _cut_plans(monkeypatch)
         simple = _plan_simple(QUERIES[name](spark, SF_ORACLE))
-        lines = simple.splitlines()
-        for i, ln in enumerate(lines):
-            if "Exchange SinglePartition" not in ln:
-                continue
-            subtree = lines[i + 1:]
-            agg = next(
-                (j for j, l in enumerate(subtree) if "HashAggregate" in l and "partial_" in l),
-                None,
-            )
-            scan = next(j for j, l in enumerate(subtree) if "FileScan" in l)
-            assert agg is not None and agg < scan, (name, ln)
-        assert "Python" not in simple and "CartesianProduct" not in simple
+        for plan in [simple, *cuts]:
+            lines = plan.splitlines()
+            for i, ln in enumerate(lines):
+                if "Exchange SinglePartition" not in ln:
+                    continue
+                subtree = lines[i + 1:]
+                agg = next(
+                    (j for j, l in enumerate(subtree) if "HashAggregate" in l and "partial_" in l),
+                    None,
+                )
+                scan = next((j for j, l in enumerate(subtree) if "FileScan" in l), None)
+                if scan is None:
+                    # reads only checkpointed blocks: every cut must
+                    # itself reduce before its scan (checked below)
+                    assert "Scan ExistingRDD" in "\n".join(subtree), (name, ln)
+                    continue
+                assert agg is not None and agg < scan, (name, ln)
+            assert "Python" not in plan and "CartesianProduct" not in plan
+        for cut in cuts:
+            lines = cut.splitlines()
+            agg = next(j for j, l in enumerate(lines) if "HashAggregate" in l and "partial_" in l)
+            scan = next(j for j, l in enumerate(lines) if "FileScan" in l)
+            assert agg < scan, (name, cut)
 
 
-def test_round10_gini_lorenz_two_phase_rank(spark):
+def test_round10_gini_lorenz_two_phase_rank(spark, monkeypatch):
     """The inequality pair ranks the customer reduction with the
     DISTRIBUTED two-phase protocol (range-partitioned parallel sort +
     broadcast prefix offsets — store._dense_rowid_frame), replacing
@@ -1026,9 +1057,12 @@ def test_round10_gini_lorenz_two_phase_rank(spark):
     perf-weak point): the rank sort must be within-partition only
     (global=false under a rangepartitioning exchange), and no window
     function may touch the customer rows — the only window allowed is
-    Lorenz's 10-row cumulative share over the decile aggregate."""
+    Lorenz's 10-row cumulative share over the decile aggregate. The
+    ranked customer rows are checkpointed, so the cut plans join the
+    returned plan under the same assertions."""
     for name in ("agg_gini_customer_spend", "agg_lorenz_deciles"):
-        simple = _plan_simple(QUERIES[name](spark, SF_ORACLE))
+        cuts = _cut_plans(monkeypatch)
+        simple = "\n".join([_plan_simple(QUERIES[name](spark, SF_ORACLE)), *cuts])
         assert "rangepartitioning" in simple, name
         for ln in simple.splitlines():
             if "Sort [cents" in ln:
@@ -1038,20 +1072,21 @@ def test_round10_gini_lorenz_two_phase_rank(spark):
                 # must sort only the 10-row decile table, never the
                 # customer rows
                 assert "windowspecdefinition(decile" in ln, (name, ln)
-        spark.catalog.clearCache()
 
 
-def test_round9_triangle_estimate_samples_before_orientation(spark):
+def test_round9_triangle_estimate_samples_before_orientation(spark, monkeypatch):
     """The DOULION sample predicate must sit below the degree
     aggregate and wedge joins (orientation runs on the thinned graph,
     the whole point of the twin); no Python, no cartesian product."""
+    cuts = _cut_plans(monkeypatch)
     plan = _plan_simple(QUERIES["graph_triangle_estimate"](spark, SF_ORACLE))
     assert "Python" not in plan and "CartesianProduct" not in plan
-    # the sampled-edge relation is built once and reused (persisted):
-    # its md5 filter appears, and every wedge join input is a reuse of
-    # the same InMemoryRelation rather than a re-derivation
-    assert "md5" in plan
-    assert "InMemoryTableScan" in plan
+    # the sampled-edge relation is built once and reused (checkpointed):
+    # its md5 filter is the cut's recipe, and every wedge join input
+    # reads the same checkpointed blocks rather than a re-derivation
+    assert len(cuts) == 1 and "md5" in cuts[0], cuts
+    assert "Scan ExistingRDD" in plan
+    assert _file_scans(plan, "vdbc_co_edges") == 1, plan  # the edge-count scalar only
 
 
 def test_round10_link_prediction_plans(spark):
@@ -1072,7 +1107,6 @@ def test_round10_link_prediction_plans(spark):
     # the top-5 cut is a per-seed window over reduced rows, not a sort
     # of the candidate space
     assert "TakeOrderedAndProject" not in plan
-    spark.catalog.clearCache()
 
 
 def test_round10_phash_banded_join_plan(spark):
@@ -1137,14 +1171,17 @@ def test_round14_kmeans_assignment_is_centroid_array_fold(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_round14_link_prediction_degree_table_computed_once(spark):
-    """r14: graph_link_prediction_seeded's degree table is persisted
-    for its three join arms (dw/du/dv) — the unpersisted plan cloned
+def test_round14_link_prediction_degree_table_computed_once(spark, monkeypatch):
+    """r14: graph_link_prediction_seeded's degree table is materialized
+    once for its three join arms (dw/du/dv) — the uncut plan cloned
     the union+aggregate degree subtree per consumer (22 scans of the
-    edge scratch). The cached table must appear in the plan, and the
-    adjacency must come from ONE exploded scan, not a two-scan union."""
+    edge scratch). The checkpointed table must be read by every arm,
+    its aggregate built once (in the cut), and the adjacency must
+    come from ONE exploded scan, not a two-scan union."""
+    cuts = _cut_plans(monkeypatch)
     plan = _plan_simple(QUERIES["graph_link_prediction_seeded"](spark, SF_ORACLE))
-    assert "InMemoryTableScan" in plan
+    assert plan.count("Scan ExistingRDD[node") >= 3, plan
+    assert len(cuts) == 1 and "count(1)" in cuts[0], cuts
 
 
 def test_round14_shingle_hashes_no_window_no_exchange(spark):

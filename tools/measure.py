@@ -1,11 +1,12 @@
-"""Round-14 optimization harness: isolate queries, time them, dump plans.
+"""Optimization harness: isolate queries, time them, dump plans.
 
-Usage: python tools/r15_measure.py [--sf SF_DIR] [--plans SUFFIX] [--runs N]
-                                   [--inclusive] name [name ...]
+Usage: python tools/measure.py [--sf SF_DIR] [--plans-dir DIR] [--plans SUFFIX]
+                               [--runs N] [--inclusive] name [name ...]
 
-For each query name: build the DataFrame, write .explain("formatted") to
-plans/r15/<name>_<SUFFIX>.txt (default suffix "before"; pass --plans after
-when re-measuring), then time the noop-sink materialization N times
+For each query name: with --plans-dir, build the DataFrame and write
+.explain("formatted") to DIR/<name>_<SUFFIX>.txt (e.g. --plans-dir
+plans/r15; default suffix "before", pass --plans after when
+re-measuring), then time the noop-sink materialization N times
 (default 3) reporting all samples and the min. --inclusive times the whole
 callable (the bench's HEADLINE_INCLUSIVE / streaming-replay rule) and is
 applied automatically to the queries bench.py treats that way.
@@ -42,10 +43,10 @@ INCLUSIVE = {
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--plans-dir", type=Path)
     ap.add_argument("--plans", default="before")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--inclusive", action="store_true")
-    ap.add_argument("--no-plan", action="store_true")
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
@@ -54,7 +55,7 @@ def main() -> int:
     import __spark_entry__ as entry
     from vector_db_core_spark.session import get_spark
 
-    spark = get_spark(app_name="r15_measure")
+    spark = get_spark(app_name="measure")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry.queries()
 
@@ -69,20 +70,19 @@ def main() -> int:
         .collect()
     )
 
-    plans_dir = REPO / "plans" / "r15"
-    plans_dir.mkdir(parents=True, exist_ok=True)
+    if args.plans_dir is not None:
+        args.plans_dir.mkdir(parents=True, exist_ok=True)
 
     for name in args.names:
         fn = queries[name]
         inclusive = args.inclusive or name in INCLUSIVE
-        spark.sparkContext.setJobDescription(f"r15:{name}")
-        if not args.no_plan:
+        spark.sparkContext.setJobDescription(f"measure:{name}")
+        if args.plans_dir is not None:
             df = fn(spark, args.sf)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            (plans_dir / f"{name}_{args.plans}.txt").write_text(plan)
-            spark.catalog.clearCache()
+            (args.plans_dir / f"{name}_{args.plans}.txt").write_text(plan)
         samples = []
         for _ in range(args.runs):
             t0 = time.perf_counter()
@@ -91,7 +91,6 @@ def main() -> int:
                 t0 = time.perf_counter()
             df.write.mode("overwrite").format("noop").save()
             samples.append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(None)
         joined = "/".join(f"{s:.3f}" for s in samples)
         tag = " (inclusive)" if inclusive else ""

@@ -346,12 +346,6 @@ def main() -> int:
             print(f"[{i+1}/{len(names)}] {name} ERROR {type(exc).__name__}: {str(exc)[:200]}")
             bad.append(name)
             continue
-        finally:
-            # several operators persist() shared intermediates (DSIR,
-            # LM scoring, PageRank, PCA) and a 200+-query sweep in one
-            # JVM would otherwise accumulate their cached blocks for
-            # the whole run (the bench.py / scale_ladder.py rule)
-            spark.catalog.clearCache()
         status = ("MATCH" if ok else "MISMATCH") + (" (fast-oracle)" if fast else "")
         if not ok:
             bad.append(name)

@@ -19,6 +19,16 @@ call sites:
     (HDFS/S3); every loop then uses reliable ``checkpoint()``, which
     survives executor loss at the cost of a filesystem write per cut.
 
+The same cut materializes any intermediate a query's returned
+DataFrame reads more than once (a view feeding two branches, a rank
+table whose partitioning must not change between a count and its
+use). Unlike ``persist()`` it registers nothing in the session's
+CacheManager: the stored blocks belong to the returned DataFrame, and
+Spark's ContextCleaner frees them once the caller drops that frame
+and the JVM collects it — no caller-side ``clearCache()``. Reliable
+checkpoint files stay on the filesystem unless
+``spark.cleaner.referenceTracking.cleanCheckpoints`` is set.
+
 The conf is read per call so tests (and a long-lived session that
 reconfigures) observe changes; the SparkContext checkpoint dir is set
 idempotently on first reliable use.

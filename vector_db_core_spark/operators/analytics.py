@@ -1083,11 +1083,11 @@ def pagerank_parts_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB plan: each iteration is one join of ranks (|nodes| rows)
     against the STATIC edge list on src plus one groupBy on dst —
     both shuffles key on node id, and the edge list is persisted once
-    and reused by all iterations. Ranks are checkpointed (persist +
-    count) every few iterations so the lineage — and with it the
-    scheduler's plan — stays shallow instead of growing 10 joins
-    deep; at cluster scale use localCheckpoint/checkpoint to truncate
-    lineage entirely.
+    and reused by all iterations. Ranks are cut with an eager
+    ``loop_checkpoint`` every few iterations and after the last one,
+    so the lineage stays shallow instead of growing 10 joins deep;
+    once the final ranks are materialized the static caches are
+    released, and the returned frame reads only the checkpoint.
     """
     # symmetrize the session-shared weighted (u < v, w) scratch table:
     # the directed weighted edge list is exactly both orientations of
@@ -1134,9 +1134,11 @@ def pagerank_parts_full(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("rank"),
             )
         )
-        if i % 3 == 2:  # keep lineage shallow (see docstring)
-            ranks = ranks.persist()
-            ranks.count()
+        if i % 3 == 2 or i == 9:  # keep lineage shallow (see docstring)
+            ranks = loop_checkpoint(ranks, eager=True)
+    edges.unpersist()
+    norm_edges.unpersist()
+    nodes.unpersist()
     return ranks
 
 
@@ -1761,17 +1763,14 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan/scale: same loop shape as the float op — per iteration one
     equi-join of ranks (|nodes| rows) against the persisted static
     edge list + one groupBy on dst, both keyed on node id; ranks
-    persist+count every 3 iterations AND at the final iteration to
-    keep lineage shallow (checkpoint at cluster scale), each
-    checkpoint unpersisting the superseded one. Because the loop
-    must materialize eagerly (count() per checkpoint), the work
-    happens at BUILD time — bench.py times this op inclusively
-    (builder + action), like the streaming replays. Once the final
-    ranks are materialized the static edges/outdeg/nodes caches are
-    released (eviction of the final cache would recompute from
-    parquet — correctness-safe); the final ranks cache itself is
-    released by the registry-wide clearCache-after-each-query
-    contract (operators/registry.py). Quantization error vs true
+    are cut with an eager ``loop_checkpoint`` every 3 iterations AND
+    at the final iteration to keep lineage shallow. Because the loop
+    materializes eagerly, the work happens at BUILD time — bench.py
+    times this op inclusively (builder + action), like the streaming
+    replays. Once the final ranks are materialized the static
+    edges/nodes caches are released; the final ranks' blocks belong
+    to the returned frame and are freed once the caller drops it
+    (checkpoint.py). Quantization error vs true
     PageRank is <= iters * (outdeg_max + 1) ulp of 10^-12 — far below
     any ranking decision; dangling nodes are structurally absent
     (basket pairs are symmetric, so every node has out-edges)."""
@@ -2130,8 +2129,6 @@ def _oriented_triangles(edges):
     regardless of hub degrees (id-ordered orientation generates Σd²
     wedges off the hubs: 69 s vs ~8 s at sf0.1). Returns
     (degree aggregate, one row per triangle as (u, v, w))."""
-    from pyspark import StorageLevel
-
     deg0 = _degrees(edges)
     du = deg0.select(F.col("node").alias("u"), F.col("dg").alias("dg_u"))
     dv = deg0.select(F.col("node").alias("v"), F.col("dg").alias("dg_v"))
@@ -2157,7 +2154,6 @@ def _oriented_triangles(edges):
             ).alias("dst"),
         )
         .repartition(width, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     e1 = o.select("src", F.col("dst").alias("b"))
     e2 = o.select("src", F.col("dst").alias("c"))
@@ -2317,15 +2313,15 @@ def graph_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     orientation). The two scalar aggregates cross-join as one-row
     broadcasts. At 100 TB you tune p down (p=1/16 cuts wedge work
     256x) and trade variance, the knob this op exists to expose."""
-    from pyspark import StorageLevel
-
     edges = _co_purchase_edges(spark, sf_dir)
     keep = F.substring(F.md5(F.concat_ws(",", F.col("u"), F.col("v"))), 1, 1) <= "3"
     cnt = edges.agg(
         F.count("*").alias("n_edges"),
         F.sum(keep.cast("long")).alias("n_edges_sampled"),
     )
-    sampled = edges.where(keep).persist(StorageLevel.MEMORY_AND_DISK)
+    # checkpointed: the degree aggregate and the orientation join both
+    # read the sample (two scratch scans uncut)
+    sampled = loop_checkpoint(edges.where(keep))
     _, tri = _oriented_triangles(sampled)
     est = tri.agg(F.count("*").alias("n_triangles_sampled"))
     return (
@@ -2497,15 +2493,8 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE; the output aggregate is <=6 rows. At 100 TB swap the exact
     percentile thresholds for ``approx_percentile`` (the documented
     exact/approx twin policy) and the plan is otherwise unchanged."""
-    from pyspark import StorageLevel
-
     o = _t(spark, sf_dir, "orders")
     mx = o.agg(F.max("o_orderdate").alias("max_d"))
-    # persisted: the threshold aggregate AND the scoring pass both
-    # read the customer reduction — without the persist each consumer
-    # re-scans orders (4 corpus scans in the executed plan; round-10
-    # plan-audit finding). Release is the registry-wide clearCache
-    # contract.
     rfm = (
         o.groupBy("o_custkey")
         .agg(
@@ -2522,7 +2511,6 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "frequency",
             "monetary_cents",
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     q = rfm.agg(
         *[
@@ -2955,7 +2943,8 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev_sum = cur_sum
     # final labels stay materialized (the PageRank discipline); the
     # symmetrized edge cache is no longer needed — re-derivable from
-    # the scratch parquet on eviction. Registry clearCache reaps lbl.
+    # the scratch parquet on eviction. lbl is a checkpoint: its blocks
+    # belong to the returned frame (checkpoint.py).
     ed.unpersist()
     sz = lbl.groupBy("comp").agg(F.count("*").alias("component_size"))
     return sz.groupBy("component_size").agg(F.count("*").alias("n_components"))
@@ -3340,13 +3329,10 @@ def graph_link_prediction_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: ONE scan of the edge scratch builds both adjacency
     # directions via a 2-element explode (the union form scanned the
     # parquet twice per reference), and the degree table — which THREE
-    # join arms consume (dw, du, dv) — is computed once and persisted
-    # (tiny: one row per node). Unpersisted, the executed plan cloned
-    # the union + two-exchange degree aggregate per consumer: 22
-    # parquet scans, 20 exchanges -> 4 scans, ~8 exchanges. Released
-    # by the registry-wide clearCache contract.
-    from pyspark import StorageLevel
-
+    # join arms consume (dw, du, dv) — is computed once and checkpointed
+    # (tiny: one row per node). Uncut, the executed plan cloned the
+    # union + two-exchange degree aggregate per consumer: 22 parquet
+    # scans, 20 exchanges -> 4 scans, ~8 exchanges.
     adj = edges.select(
         F.explode(
             F.array(
@@ -3355,10 +3341,8 @@ def graph_link_prediction_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.w", "e.n")
-    deg = (
-        adj.groupBy(F.col("w").alias("node"))
-        .agg(F.count("*").alias("dg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    deg = loop_checkpoint(
+        adj.groupBy(F.col("w").alias("node")).agg(F.count("*").alias("dg"))
     )
     a = adj.where(F.col("n") <= LINK_SEED_MAX_KEY).alias("a")
     b = adj.alias("b")

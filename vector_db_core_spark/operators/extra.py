@@ -16,6 +16,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from vector_db_core_spark.checkpoint import loop_checkpoint
 from vector_db_core_spark.functions.exact import dsum
 from vector_db_core_spark.functions.text import tokens
 from vector_db_core_spark.operators.registry import register
@@ -2832,24 +2833,22 @@ def _ranked_customer_spend(spark: SparkSession, sf_dir: str):
          local position (``store._dense_rowid_frame``, the exact
          protocol ``OrdinalStore.pushx`` uses for dense rowids).
 
-    The sorted frame is PERSISTED before tagging because
+    The sorted frame is CHECKPOINTED before tagging because
     ``monotonically_increasing_id`` requires deterministic
     partitioning between the counts action and downstream use (the
-    ``with_dense_rowid`` contract); release is the registry-wide
-    clearCache-per-query contract. The rank key is a TOTAL order
+    ``with_dense_rowid`` contract); the blocks belong to the returned
+    frame (``checkpoint.loop_checkpoint``). The rank key is a TOTAL order
     (custkey is unique), so ranks — and everything derived — are
     identical at any parallelism. At 100 TB this ranks 15M+ customer
     rows with no single-partition stage anywhere: the only
     single-point work is the K-row prefix sum on the driver."""
-    from pyspark import StorageLevel
-
     from vector_db_core_spark.store import _dense_rowid_frame
 
     c = _customer_spend_cents(spark, sf_dir)
-    srt = (
-        c.repartitionByRange("cents", "o_custkey")
-        .sortWithinPartitions("cents", "o_custkey")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    srt = loop_checkpoint(
+        c.repartitionByRange("cents", "o_custkey").sortWithinPartitions(
+            "cents", "o_custkey"
+        )
     )
     tagged = srt.withColumn("_mid", F.monotonically_increasing_id())
     ranked, n_total = _dense_rowid_frame(tagged, start=1)
@@ -6308,7 +6307,7 @@ def agg_kendall_tau_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("by"),
     )
-    g = li.groupBy("bx", "by").agg(F.count("*").alias("n")).persist()
+    g = li.groupBy("bx", "by").agg(F.count("*").alias("n"))
     a, b = g.alias("a"), g.alias("b")
     pair_n = (F.col("a.n") * F.col("b.n")).cast("decimal(38,0)")
     zero = F.lit(0).cast("decimal(38,0)")
@@ -6429,7 +6428,7 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     them on the driver, and broadcast the offsets back
     (``_dense_rowid_frame``'s shape with counts in place of rows;
     below(v) is partition-boundary-invariant, and the sorted
-    histogram is persisted so the collected offsets stay aligned with
+    histogram is checkpointed so the collected offsets stay aligned with
     the frame they came from — the ``_ranked_customer_spend``
     contract). DOUBLED midranks (always integers) keep every moment
     in exact DECIMAL(38,0) arithmetic — the doubling cancels in rho
@@ -6442,9 +6441,10 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts a grid-sized map; the revenue midranks join back on
     the revenue key; the 6-moment reduction is one map-side-combined
     aggregate to a single row."""
-    from pyspark import StorageLevel
-
-    x = (
+    # checkpointed: BOTH histograms and the final moment join read
+    # this per-order reduction — uncut, the lineitem scan + aggregate
+    # ran three times in the executed plan (r14).
+    x = loop_checkpoint(
         _t(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(
@@ -6454,11 +6454,6 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("yv"),
         )
         .select("xv", "yv")
-        # persisted (r14): BOTH histograms and the final moment join
-        # read this per-order reduction — unpersisted, the lineitem
-        # scan + aggregate ran three times in the executed plan.
-        # Released by the registry-wide clearCache contract.
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # item-count side: grid-sized histogram (basket sizes)
     hx = x.groupBy("xv").agg(F.count("*").alias("c"))
@@ -6467,11 +6462,10 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cx = hx.select("xv", (2 * below + F.col("c") + 1).alias("rx2"))
     # price side: weighted two-phase cumsum over the value histogram
     hy = x.groupBy("yv").agg(F.count("*").alias("c"))
-    srt = (
+    srt = loop_checkpoint(
         hy.repartitionByRange("yv")
         .sortWithinPartitions("yv")
         .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     totals = srt.groupBy("_pid").agg(F.sum("c").alias("t")).collect()
     offs, acc = [], 0

@@ -391,7 +391,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
          collects the distinct shingle-hash set and the 64-slot MinHash
          signature derives from it in a single projection
          (minhash_sig_of_set) [aggregated rows only] — materialized
-         once (persist) for all four downstream consumers (both band
+         once (loop_checkpoint) for all four downstream consumers (both band
          join sides, both verify sides) instead of re-running the
          corpus scan per consumer;
       2. 16 bands x 4 rows → band keys; explode to (doc_id, band, key)
@@ -414,19 +414,15 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One aggregate produces the shingle-hash set; the 64 signature
     # slots derive from it as a single short expression
     # (minhash_sig_of_set — the 64-separate-aggregates form spends 10x
-    # the query's runtime compiling its huge codegen stage). Persisted
-    # because FOUR consumers read it (two band-join sides, two verify
-    # sides) — the signature table a production LSH job would
-    # materialize; column pruning would otherwise specialize each
-    # consumer's plan and defeat exchange reuse. CacheManager keys on
-    # the logical plan, so repeated calls (e.g. the
-    # connected-components query on top of this one) share one cache
-    # entry rather than leaking.
-    grouped = (
+    # the query's runtime compiling its huge codegen stage).
+    # Checkpointed because FOUR consumers read it (two band-join sides,
+    # two verify sides) — the signature table a production LSH job
+    # would materialize; column pruning would otherwise specialize each
+    # consumer's plan and defeat exchange reuse.
+    grouped = loop_checkpoint(
         hashes.groupBy("doc_id")
         .agg(F.collect_set("_b").alias("hs"))
         .withColumn("sig", minhash_sig_of_set(F.col("hs"), num_hashes=64))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     bands = grouped.select(
         "doc_id",
@@ -470,7 +466,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|batch| + matching buckets), independent of corpus size. Here
     documents with ``doc_id % 10 == 0`` play the arriving batch and
     the rest the standing corpus; both sides share ONE signature
-    build (the persisted table both daily jobs would read), and the
+    build (the materialized table both daily jobs would read), and the
     band join is restricted to batch x corpus — no corpus x corpus
     candidate is ever generated or verified. Verification and the
     detection-probability argument are identical to
@@ -479,12 +475,11 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _t(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % 10 == 0
-    grouped = (
+    grouped = loop_checkpoint(
         _shingle_hashes(docs)
         .groupBy("doc_id")
         .agg(F.collect_set("_b").alias("hs"))
         .withColumn("sig", minhash_sig_of_set(F.col("hs"), num_hashes=64))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     bands = grouped.select(
         "doc_id",
@@ -1184,8 +1179,8 @@ def dedup_connected_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Iterative min-label propagation — the canonical Spark shape for an
     algorithm SQL can't express in one pass: each round is one
-    (edges ⋈ labels) + min-aggregate, labels persist between rounds
-    (lineage cut), and the loop stops when a one-row count says no
+    (edges ⋈ labels) + min-aggregate, labels are checkpointed between
+    rounds (lineage cut), and the loop stops when a one-row count says no
     label changed. Rounds needed = component diameter (tiny for dedup
     graphs: duplicates cluster tightly); each round shuffles only
     (node, label) pairs, never documents. The DuckDB oracle computes
@@ -1195,10 +1190,9 @@ def dedup_connected_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.unionByName(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).persist()
-    labels = (
+    labels = loop_checkpoint(
         edges.select(F.col("doc_a").alias("node")).distinct()
         .withColumn("label", F.col("node"))
-        .persist()
     )
     try:
         for _ in range(20):  # >= diameter of any real dedup component
@@ -1207,13 +1201,12 @@ def dedup_connected_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("doc_a")
                 .agg(F.min("label").alias("nbr_min"))
             )
-            new_labels = (
+            new_labels = loop_checkpoint(
                 labels.join(nbr, labels.node == nbr.doc_a, "left")
                 .select(
                     "node",
                     F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias("label"),
                 )
-                .persist()
             )
             changed = (
                 new_labels.alias("n")
@@ -1221,7 +1214,6 @@ def dedup_connected_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .where(F.col("n.label") != F.col("o.label"))
                 .count()
             )
-            labels.unpersist()
             labels = new_labels
             if changed == 0:
                 break
@@ -1415,10 +1407,10 @@ def dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_avg_logprob(docs: DataFrame) -> DataFrame:
     """Per-document average unigram log-probability, built the way a
     production job materializes it: ONE corpus scan reduces to the
-    doc-term-frequency table ``tf`` (persisted — three consumers read
-    it: the vocab frequencies, the corpus total, and the scoring
-    join, and branch-local column pruning would otherwise clone the
-    scan+explode subtree per consumer — the ``pipeline_dsir_weights``
+    doc-term-frequency table ``tf`` (three consumers read it: the
+    vocab frequencies, the corpus total, and the scoring join; all
+    three read the one tf exchange — ReuseExchange, plan-pinned — so
+    the scan+explode subtree runs once — the ``pipeline_dsir_weights``
     replan, applied to the LM-scoring family). Scoring weights each
     distinct (doc, term) row by ``tf`` instead of re-exploding
     occurrences: ``tf * DECIMAL(ln p)`` is exact repeated addition,
@@ -1430,11 +1422,7 @@ def _doc_avg_logprob(docs: DataFrame) -> DataFrame:
     broadcast would hit the 8 GB ceiling and fail where the
     statistics-driven planner degrades to a shuffle join."""
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
-    tf = (
-        tok.groupBy("doc_id", "token")
-        .agg(F.count("*").alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     freq = tf.groupBy("token").agg(F.sum("tf").alias("c"))
     total = tf.agg(F.sum("tf").cast("double").alias("_n"))
     return (
@@ -1477,7 +1465,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     for model-based perplexity filtering).
 
     Self-training plan: see ``_doc_avg_logprob`` — one corpus scan
-    reduces to the persisted doc-term-frequency table, everything
+    reduces to the doc-term-frequency table, everything
     else (vocab frequencies, corpus total, scoring) reduces from it;
     per-token ``ln`` values are cast to DECIMAL before summing so the
     per-doc sum is order-independent; round(6) absorbs the engines'
@@ -2690,10 +2678,11 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # two consumers (the candidate count and the top-k) would re-run
     # the scoring UDF over the corpus; the survivor set is the small
-    # post-prune slice (corpus/cells x nprobe), so cache IT — the
-    # n_scanned broadcast job is the materialization, and the top-k
-    # reads the cache (the k-core two-action discipline)
-    surv = scored.where(F.col("cell").isin([int(c) for c in probe])).persist()
+    # post-prune slice (corpus/cells x nprobe), so checkpoint IT — the
+    # first read materializes it, and the other reads the stored blocks
+    surv = loop_checkpoint(
+        scored.where(F.col("cell").isin([int(c) for c in probe]))
+    )
     n_scanned = surv.agg(F.count("*").cast("bigint").alias("n_scanned"))
     top = surv.orderBy("adc_dist", "vec_id").limit(_IVFPQ_TOPK)
     return top.crossJoin(F.broadcast(n_scanned)).select(
@@ -2813,14 +2802,15 @@ def _ivfpq_serve_from_codes(codes, x, qm, cqd, probe) -> DataFrame:
         F.element_at(lut_cols[b], F.col("codes").getItem(b) + 1)
         for b in range(_PQ_NB)
     )
-    scored = probed.select(
-        "vec_id",
-        F.col("cell").cast("int").alias("cell"),
-        adc.cast("bigint").alias("adc_dist"),
+    # the pruned slice is corpus/cells x nprobe rows; checkpoint it for
+    # its two consumers (count + top-k) like the inline op's survivor set
+    scored = loop_checkpoint(
+        probed.select(
+            "vec_id",
+            F.col("cell").cast("int").alias("cell"),
+            adc.cast("bigint").alias("adc_dist"),
+        )
     )
-    # the pruned slice is corpus/cells x nprobe rows; cache it for its
-    # two consumers (count + top-k) like the inline op's survivor set
-    scored = scored.persist()
     n_scanned = scored.agg(F.count("*").cast("bigint").alias("n_scanned"))
     top = scored.orderBy("adc_dist", "vec_id").limit(_IVFPQ_TOPK)
     qlit = F.array(*[F.lit(int(v)).cast("bigint") for v in qm])
@@ -4271,19 +4261,17 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-probability == lower perplexity == 'head'.
 
     Plan/scale: the score table comes from ``_doc_avg_logprob`` (one
-    corpus scan reduced to a persisted doc-term-frequency table,
-    DECIMAL-cast order-free sums) and is itself PERSISTED because two
-    consumers read it (the tercile aggregate and the final tagging
-    select). The tercile cut points are ONE exact two-quantile
+    corpus scan reduced to a doc-term-frequency table, DECIMAL-cast
+    order-free sums); its two consumers (the tercile aggregate and
+    the final tagging select) read the same per-document exchange
+    (ReuseExchange), so the corpus is still scanned once. The tercile cut points are ONE exact two-quantile
     aggregate broadcast back as a one-row frame, so the bucket tag is
     a map-side CASE — at 100 TB swap in ``approx_percentile`` for the
     cut points (the documented exact/approx twin policy) and nothing
     else changes. Spark exact ``percentile`` == DuckDB
     ``quantile_cont`` bit-for-bit (the contract
     ``pipeline_curriculum_phases`` pins)."""
-    lp = _doc_avg_logprob(_t(spark, sf_dir, "documents")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    lp = _doc_avg_logprob(_t(spark, sf_dir, "documents"))
     q = lp.agg(
         F.percentile("avg_logprob", 2.0 / 3.0).alias("q_head"),
         F.percentile("avg_logprob", 1.0 / 3.0).alias("q_mid"),
@@ -5045,7 +5033,10 @@ def _minhash_est_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # costs MORE than the 3.5 s of md5 it saves at 32 cores. The
     # md5-seeded family is the oracle contract, so the hash itself
     # cannot be swapped; this form is the measured floor — stop here.
-    hs = (
+    # checkpointed: the band keys and both verify sides read the
+    # signatures (uncut, the corpus scan ran twice); the scratch write
+    # of this build is the only action, so the blocks die with it
+    hs = loop_checkpoint(
         sh.select("doc_id", "s", F.explode(F.sequence(F.lit(0), F.lit(15))).alias("seed"))
         .withColumn(
             "h",
@@ -5061,7 +5052,6 @@ def _minhash_est_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "seed")
         .agg(F.min("h").alias("sig"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     bands = hs.groupBy("doc_id", F.expr("seed div 4").alias("band")).agg(
         F.array_join(
@@ -5167,22 +5157,19 @@ def sim_kmeans_lloyd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the exact-PCA build. Iteration tables are k rows; nothing
     grows with corpus size except the two linear passes."""
     k = 4
-    # r14: persist the micro-quantized vector table — SEVEN subtrees
-    # consume it (the seed join, each iteration's assign + centroid
-    # re-join, the final assign) and the unpersisted plan re-ran the
+    # r14: materialize the micro-quantized vector table — SEVEN
+    # subtrees consume it (the seed join, each iteration's assign +
+    # centroid re-join, the final assign) and the uncut plan re-ran the
     # scan + per-element quantize transform for every one (14 parquet
-    # scans in the executed plan). Released by the registry-wide
-    # clearCache contract.
-    x = (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
+    # scans in the executed plan).
+    x = loop_checkpoint(
+        load_table(spark, sf_dir, "embeddings").select(
             "vec_id",
             F.expr(
                 "transform(cast(embedding as array<double>),"
                 " v -> cast(round(v * 1000000.0, 0) as bigint))"
             ).alias("xm"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     init = (
         x.select("vec_id")
@@ -6210,8 +6197,8 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: persist the 50-row pool — THREE consumers re-ran the full
     # corpus cosine + TakeOrdered without it (the a/b pairwise arms and
     # the relevance collect each re-derived it: three corpus passes).
-    # Bounded by MMR_POOL whatever the corpus; released by the
-    # registry-wide clearCache contract.
+    # Bounded by MMR_POOL whatever the corpus; only the two collects
+    # below read it, so it is released right after them.
     rel = (
         e.where(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -6235,6 +6222,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction, independent of corpus size
     rel_rows = {r.vec_id: r.rel for r in rel.select("vec_id", "rel").collect()}
     sim_rows = {(r.pa, r.pb): r.sim for r in ps.collect()}
+    rel.unpersist()
     picked: list[tuple[int, int, float, float]] = []
     chosen: list[int] = []
     for rank in range(1, MMR_K + 1):
@@ -7556,7 +7544,7 @@ def sim_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     wider prefixes chain on the narrower column (64 products total;
     a first cut restated every prefix from scratch — 120 products in
     four separate scans — and its ladder showed a compile-dominated
-    ~19 s constant); the tiny (vec_id, d8..d64) frame persists and
+    ~19 s constant); the tiny (vec_id, d8..d64) frame is checkpointed and
     each width closes with ``orderBy().limit({MRL_TOP_K})`` —
     TakeOrderedAndProject, the distributed two-phase top-k — so
     vectors are scanned once and never shuffle; the overlap join runs
@@ -7593,9 +7581,12 @@ def sim_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "*", (F.col(f"d{prev}") + seg(prev, d)).alias(f"d{d}")
         )
         prev = d
-    dists = dists.select(
-        "vec_id", *[F.col(f"d{d}").cast("bigint").alias(f"d{d}") for d in MRL_PREFIX_DIMS]
-    ).persist()
+    dists = loop_checkpoint(
+        dists.select(
+            "vec_id",
+            *[F.col(f"d{d}").cast("bigint").alias(f"d{d}") for d in MRL_PREFIX_DIMS],
+        )
+    )
     tops = {}
     for d in MRL_PREFIX_DIMS:
         tops[d] = (

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_db_core_spark.checkpoint import loop_checkpoint
 from vector_db_core_spark.operators.registry import register
 from vector_db_core_spark.sources import load_table
 
@@ -1335,17 +1336,13 @@ def pipeline_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the corpus-level token stats REDUCE FROM tf's output — the
     # token explode feeds exactly one aggregation and the corpus is
     # scanned once; stats is a second, distinct-doc-term-sized
-    # aggregate, not a second corpus pass. tf is PERSISTED because
+    # aggregate, not a second corpus pass. tf is CHECKPOINTED because
     # three consumers read it (stats, the scalar totals, the weight
     # join) and branch-local column pruning would otherwise clone the
     # scan+explode subtree per consumer — it is exactly the
     # doc-term-frequency table a production DSIR job materializes.
-    from pyspark import StorageLevel
-
-    tf = (
-        tok.groupBy("doc_id", "lang", "term")
-        .agg(F.count("*").alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    tf = loop_checkpoint(
+        tok.groupBy("doc_id", "lang", "term").agg(F.count("*").alias("tf"))
     )
     stats = tf.groupBy("term").agg(
         F.sum("tf").alias("c_src"),
@@ -1844,15 +1841,12 @@ def pipeline_unigram_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     form).
 
     Plan/scale: one corpus scan (split tag and tokens in the same
-    projection), one map-side-combined shuffle to the vocab table —
-    which is PERSISTED because two consumers read it (the per-token
-    rows and the one-row totals; unpersisted, Catalyst re-derives the
-    totals from a second corpus scan — the pre-replan DSIR pathology,
-    caught by a plan pin here). Totals broadcast-cross-join back, the
-    ``text_zipf_fit``/``filter_funnel`` shape; release is the
-    registry-wide clearCache contract (registry.py)."""
-    from pyspark import StorageLevel
-
+    projection), one map-side-combined shuffle to the vocab table,
+    which two consumers read (the per-token rows and the one-row
+    totals); both read the SAME exchange (ReuseExchange), so the
+    corpus is scanned once — pinned by a plan test. Totals
+    broadcast-cross-join back, the ``text_zipf_fit``/``filter_funnel``
+    shape."""
     from vector_db_core_spark.functions.text import tokens
 
     tagged = _docs(spark, sf_dir).select(
@@ -1862,7 +1856,7 @@ def pipeline_unigram_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = tagged.groupBy("token").agg(
         F.sum(F.when(F.col("is_train"), 1).otherwise(0)).alias("n_train"),
         F.sum(F.when(F.col("is_train"), 0).otherwise(1)).alias("n_val"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     tot = c.agg(
         F.sum("n_train").alias("t_train"),
         F.sum("n_val").alias("t_val"),

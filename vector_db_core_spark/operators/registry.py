@@ -12,19 +12,10 @@ Oracle-matching rules used throughout (see functions/exact.py):
   * type-normalizing CASTs in the SQL where DuckDB widens differently
     (count/length/year → BIGINT vs Spark's INT, etc.).
 
-Consumer contract — clearCache after each query: a handful of
-operators persist() a shared intermediate that the returned DataFrame
-reads more than once (the DSIR / LM-scoring doc-term-frequency table,
-the exact-PCA covariance cells, the exact-PageRank final ranks).
-Unpersisting inside the operator would forfeit the reuse the persist
-exists for, so release is the CALLER's job: any long-lived consumer
-iterating the registry (bench.py, tools/oracle_sweep.py,
-tools/scale_ladder.py, the external driver harness, tests via the
-oracle replica) must call ``spark.catalog.clearCache()`` after
-materializing each query, or cached blocks accumulate for the session
-lifetime. All in-repo consumers do; the cached tables are reduction-
-sized (vocab / |labels|·d² / |nodes| rows), so even a consumer that
-skips the call degrades by bounded memory, not correctness.
+A query leaves no cached data behind: an operator that materializes an
+intermediate either releases it before returning or cuts it with
+``checkpoint.loop_checkpoint``, whose blocks belong to the returned
+DataFrame and are freed once the caller drops it.
 """
 
 from __future__ import annotations

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from vector_db_core_spark.checkpoint import loop_checkpoint
 from vector_db_core_spark.functions.exact import dec, dsum
 from vector_db_core_spark.operators.registry import register
 from vector_db_core_spark.sources import load_table
@@ -532,7 +533,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     view (the original's CREATE VIEW revenue0).
 
     100 TB plan: one suppkey shuffle builds the revenue view; it is
-    cached (it feeds both the max and the equality filter — the
+    checkpointed (it feeds both the max and the equality filter — the
     one-line analog of Q15's view reuse), the max collapses to a
     broadcast one-row frame, and the equality match compares doubles
     that came from the same exact-decimal sums — no epsilon needed.
@@ -543,14 +544,13 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
     ).select("l_suppkey", "l_extendedprice", "l_discount")
-    # persisted because BOTH branches below read it (max + equality
-    # filter); |suppliers| rows after aggregation, so the entry is
-    # bounded at any SF, and CacheManager keys on the analyzed plan so
-    # repeated calls share one entry rather than accumulating.
-    revenue = (
-        li.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(_disc_price()).cast("double").alias("total_revenue"))
-        .persist()
+    # checkpointed because BOTH branches below read it (max + equality
+    # filter; ReuseExchange does not dedupe the second lineitem read);
+    # |suppliers| rows after aggregation, bounded at any SF.
+    revenue = loop_checkpoint(
+        li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
+            F.sum(_disc_price()).cast("double").alias("total_revenue")
+        )
     )
     best = revenue.agg(F.max("total_revenue").alias("best_revenue"))
     supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")

@@ -52,10 +52,12 @@ def reap_at_exit(path: str) -> str:
 # - ``cached_table(spark, key, sf_dir, builder)``: build at most once
 #   per (process, key, sf_dir), served from a pid-keyed scratch
 #   parquet. A scratch FILE rather than ``persist()`` because the
-#   registry's clearCache-per-query contract (registry.py) would
-#   evict a cached frame between queries; parquet round-trips
-#   doubles/longs/booleans bit-exactly, so the hash gates are
-#   unaffected.
+#   table must outlive the query that builds it: a persisted frame
+#   would stay behind as a session-wide CacheManager entry after
+#   every query, and any caller's ``clearCache()`` would drop it;
+#   the file lives exactly as long as the process (``reap_at_exit``).
+#   Parquet round-trips doubles/longs/booleans bit-exactly, so the
+#   hash gates are unaffected.
 # - pid keying isolates PROCESSES; the per-key ``threading.Lock``
 #   around check-then-build isolates THREADS (two threads in one
 #   process would otherwise both build and race the overwrite —

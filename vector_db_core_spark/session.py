@@ -50,15 +50,18 @@ def get_spark(app_name: str = "vector_db_core_spark", shuffle_partitions: int | 
         # r15: let the planner pick shuffled-hash join when its size
         # conditions are met (guide §3.1/§9) instead of always
         # preferring sort-merge. The iterative loops join a large
-        # cached edge table against a small per-iteration state frame:
-        # SMJ re-SORTS the 2|E| cached edge rows every iteration, SHJ
-        # builds the hash on the small state side and streams the
-        # edges unsorted. Quiet-host alternating A/B (two windows):
-        # pagerank med 9.14 -> 7.57 s / min 10.27 -> 6.65, CC and
-        # kcore flat-to-better, nothing worse. Cluster-safe: the
-        # planner only chooses SHJ when a build side fits its
-        # per-partition threshold, and falls back to SMJ otherwise —
-        # a size-gated preference, not a forced hint.
+        # cached edge table against a small per-iteration state frame;
+        # SMJ re-SORTS the 2|E| cached edge rows every iteration.
+        # Quiet-host alternating A/B (two windows): pagerank med
+        # 9.14 -> 7.57 s / min 10.27 -> 6.65, CC and kcore
+        # flat-to-better, nothing worse. Caveat: the committed plan
+        # (plans/r15/graph_pagerank_iteration_after_shj.txt:9) builds
+        # the hash on the 2.39M-row / 73 MiB cached EDGE side
+        # (BuildLeft), not on the small state: the planner's size gate
+        # compares estimated statistics, not the real sides. A
+        # shuffled-hash build cannot spill: each task must hold its
+        # whole edge-side partition in memory, a risk that grows with
+        # the graph.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

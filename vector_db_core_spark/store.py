@@ -102,9 +102,12 @@ def with_dense_rowid(df: DataFrame, start: int = 0, rowid_col: str = ROWID) -> D
     The input must be deterministically partitioned between the count
     action and downstream use (true for file scans and cached frames).
     Callers with non-deterministic sources must persist first —
-    ``OrdinalStore.pushx`` does exactly that, and additionally verifies
-    the written count against the collected counts so any drift fails
-    loudly instead of silently corrupting the ordinal invariant.
+    ``OrdinalStore.pushx`` does exactly that. Nothing verifies the
+    result: pushx records as ``written`` the total of the same
+    collected counts and never reads the written rows back, so a
+    partition that drifts between the counts action and the write
+    (e.g. a persisted block lost and recomputed differently) would
+    corrupt the ordinal invariant silently.
     """
     tagged = df.withColumn("_mid", F.monotonically_increasing_id())
     out, _ = _dense_rowid_frame(tagged, start)
