@@ -293,10 +293,11 @@ def test_aqe_splits_skewed_join_partition(spark):
       * JOINS → AQE. It measures real map-output sizes at the shuffle
         boundary and splits oversized partitions (replicating the
         matching build-side rows), so no key statistics are needed
-        up front. This is why session.py ships adaptive + skewJoin
-        enabled. Thresholds here are shrunk only so a test-sized
-        dataset crosses them; production keeps the defaults (256MB /
-        5x median).
+        up front. Adaptive execution and skewJoin are Spark's
+        defaults, which both session shapes (``get_spark()`` and a
+        plain session) share. Thresholds here are shrunk only so a
+        test-sized dataset crosses them; production keeps the defaults
+        (256MB / 5x median).
       * AGGREGATIONS → salting (functions/skew.py). AQE cannot split
         an aggregation's partition, because rows of one group must
         meet in one task; pre-spreading the key over salt buckets is
@@ -346,6 +347,47 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def _executed_plans(spark, run) -> list[str]:
+    """Call ``run()`` and return the physical plan description of every
+    SQL execution it started, from the SQL status store (final plans
+    for adaptive queries, including the jobs an operator runs while it
+    builds its frame)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()  # a Scala Seq
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = {e.executionId() for e in executions()}
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() not in seen
+    ]
+
+
+def test_graph_loops_plan_no_shuffled_hash_join(spark):
+    """The graph loops join a cached edge table against small
+    per-iteration state. A shuffled hash join there builds its hash
+    on whichever side the size estimates pick (the cached edge side,
+    in the plans that had one), and that build cannot spill. Under
+    Spark's default join selection these loops broadcast (a build
+    bounded by the broadcast threshold) or sort-merge (which spills)."""
+    for name in (
+        "graph_pagerank_exact",
+        "graph_pagerank_parts",
+        "graph_connected_components",
+    ):
+        plans = _executed_plans(
+            spark, lambda: QUERIES[name](spark, SF_ORACLE).collect()
+        )
+        assert plans, name
+        for plan in plans:
+            assert "ShuffledHashJoin" not in plan, (name, plan[:3000])
 
 
 def test_cluster_survivors_singletons_avoid_corpus_shuffle(spark):

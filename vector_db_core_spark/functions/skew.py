@@ -2,7 +2,7 @@
 
 At 100 TB a handful of hot keys can pin an aggregation or join to a
 few straggler tasks. Joins get runtime skew-splitting from AQE
-(``spark.sql.adaptive.skewJoin`` — on in session.py); aggregations
+(``spark.sql.adaptive.skewJoin``, on by Spark's default); aggregations
 over DECOMPOSABLE functions (count/sum/min/max) can always be salted
 by hand: spread each key over N salt buckets, partially aggregate on
 (key, salt) — at most N rows per hot key survive per partition after

@@ -1,10 +1,13 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory for this engine.
 
-Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default all
-cores); the same configs are the ones we would ship on a 1000-executor
-cluster — AQE on (runtime re-planning, skew-join splitting, partition
-coalescing), UTC session time (oracle comparability), Arrow transfer
-for the few pandas-UDF operators.
+``get_spark`` sets deployment settings only: the ``local[$SPARK_GRAFT_CPUS]``
+master (default all cores), a shuffle width of that many partitions,
+driver memory, no UI, and Arrow transfer for the few pandas-UDF
+operators. Query planning runs on Spark's own defaults (AQE,
+skew-join splitting, partition coalescing, join selection), the same
+ones a plain ``SparkSession`` plans with. The engine's session
+invariants (UTC time, nanos-as-long parquet reads) come from
+``init_session``, which also applies them to a session the caller built.
 """
 
 from __future__ import annotations
@@ -13,62 +16,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+from vector_db_core_spark.sources.loaders import init_session
 
-def get_spark(app_name: str = "vector_db_core_spark", shuffle_partitions: int | None = None) -> SparkSession:
+
+def get_spark(app_name: str = "vector_db_core_spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``spark.sql.shuffle.partitions`` defaults to the local core count —
-    on a real cluster this would be ~2-3x total executor cores, and AQE
+    ``spark.sql.shuffle.partitions`` is the local core count — on a
+    real cluster this would be ~2-3x total executor cores, and AQE
     coalesces the excess at runtime anyway.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
-
-    builder = (
+    shuffle_partitions = int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
+    spark = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r15: keep persisted plans' output partitioning VISIBLE to
-        # consumers (Spark 3.4+ defaults this to true, wrapping cached
-        # subtrees in AdaptiveSparkPlan and hiding their partitioning,
-        # so every join against a deliberately repartition(k, key)'d
-        # cache re-exchanged BOTH sides — measured in the executed
-        # triangle/pagerank plans). This engine's caches are
-        # explicitly partitioned loop state (edges on src, labels on
-        # node, oriented edges on src): consumers must be able to
-        # reuse that partitioning. Quiet-host alternating A/B:
-        # pagerank med 9.47 -> 7.81 s, connected components med
-        # 5.27 -> 4.02 s, triangles flat. The cost — no AQE
-        # coalescing inside cached builds — is deliberate: the builds
-        # pin their own widths.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-        # r15: let the planner pick shuffled-hash join when its size
-        # conditions are met (guide §3.1/§9) instead of always
-        # preferring sort-merge. The iterative loops join a large
-        # cached edge table against a small per-iteration state frame;
-        # SMJ re-SORTS the 2|E| cached edge rows every iteration.
-        # Quiet-host alternating A/B (two windows): pagerank med
-        # 9.14 -> 7.57 s / min 10.27 -> 6.65, CC and kcore
-        # flat-to-better, nothing worse. Caveat: the committed plan
-        # (plans/r15/graph_pagerank_iteration_after_shj.txt:9) builds
-        # the hash on the 2.39M-row / 73 MiB cached EDGE side
-        # (BuildLeft), not on the small state: the planner's size gate
-        # compares estimated statistics, not the real sides. A
-        # shuffled-hash build cannot spill: each task must hold its
-        # whole edge-side partition in memory, a risk that grows with
-        # the graph.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.filterPushdown", "true")
+        .getOrCreate()
     )
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return init_session(spark)
